@@ -362,7 +362,15 @@ class GeocubeAccessor:
         """Per-run metrics (event-log analog, core/backend.py:23-28),
         in COMMIT order (the metrics filenames are uuid-hex — sorting
         them would order runs randomly; the commit counter is the
-        operational timeline the Gantt renders)."""
+        operational timeline the Gantt renders). One row per committed
+        fill, patch or compaction:
+
+        - ``batch_id``: the committed batch;
+        - ``written``: chunks the batch wrote;
+        - ``patch_id`` (patches) / ``batches_covered`` (compactions);
+        - ``sec``: the run's wall seconds up to its commit;
+        - ``phase_s``: ``{plan, count, blocks, events, lineage,
+          commit}`` -> seconds, the commit-path phases in order."""
         import glob
         import json
 

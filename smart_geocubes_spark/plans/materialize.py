@@ -7,12 +7,13 @@ Re-expresses the reference's load-and-cache lifecycle
     -> LEFT ANTI JOIN lineage            (cache skip, accessor.py:434-436)
     -> mapInPandas block generation      (download_patch analog)
     -> partitioned parquet append        (chunk-region write, backend.py:263-272)
-    -> lineage append = COMMIT           (loaded_patches + icechunk commit,
+    -> lineage append + commit ticket    (loaded_patches + icechunk commit,
                                           backends/simple.py:36-38)
 
 Transactional model: each run writes under ``blocks/batch=<id>/`` and
-then ``lineage/batch=<id>/``; a batch exists iff its lineage write
-completed (Spark's job-level commit + _SUCCESS marker). Readers resolve
+then ``lineage/batch=<id>/``; a batch exists iff its commit ticket was
+taken after the lineage write (:func:`_commit_batch`, the one commit
+path of every writer). Readers resolve
 the cube as blocks SEMI JOIN lineage, so a job killed mid-write leaves
 invisible orphans and the next run redoes exactly the missing chunks —
 the same observable semantics as one icechunk commit per patch with
@@ -72,6 +73,7 @@ LINEAGE_SCHEMA = (
     # coalesce(src_batch, batch_id).
     "src_batch string"
 )
+LINEAGE_COLS = [f.split()[0] for f in LINEAGE_SCHEMA.split(", ")]
 # per-chunk event rows emitted from inside the block-generation kernel;
 # t_start/t_end bound the Arrow batch that produced the chunk (batch
 # granularity — the vectorized analog of the reference's per-patch
@@ -308,6 +310,18 @@ def block_base_values(b: pd.DataFrame) -> np.ndarray:
     )
 
 
+def _write_json_atomic(p: str, obj) -> None:
+    """JSON file write via a same-directory temp file + ``os.replace``:
+    a reader (or a crash mid-write) sees the old file or the new one,
+    never a torn one. Temp names end in ``.tmp.<hex>``, so ``*.json``
+    globs never pick them up."""
+    os.makedirs(os.path.dirname(p), exist_ok=True)
+    tmp = f"{p}.tmp.{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, p)
+
+
 def create_cube(path: str, spec: CubeSpec) -> None:
     """DDL: write grid/channel/time metadata + empty layout (reference
     ``create()``, ``core/accessor.py:206-296``). Idempotent-checked like
@@ -316,8 +330,7 @@ def create_cube(path: str, spec: CubeSpec) -> None:
         raise FileExistsError(path)
     os.makedirs(os.path.join(path, "blocks"), exist_ok=True)
     os.makedirs(os.path.join(path, "lineage"), exist_ok=True)
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(spec.to_json(), f)
+    _write_json_atomic(os.path.join(path, "_meta.json"), spec.to_json())
 
 
 def open_spec(path: str) -> CubeSpec:
@@ -361,10 +374,7 @@ def add_channel(path: str, name: str, dtype: str = "float64") -> CubeSpec:
         time_epochs=spec.time_epochs,
         dtypes=new_dtypes,
     )
-    tmp = os.path.join(path, f"_meta.json.tmp.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(new.to_json(), f)
-    os.replace(tmp, os.path.join(path, "_meta.json"))
+    _write_json_atomic(os.path.join(path, "_meta.json"), new.to_json())
     return new
 
 
@@ -876,41 +886,72 @@ def _lineage_nbytes(spec: CubeSpec, n_px: int):
     return expr.cast("long")
 
 
-def materialize(
-    spark: SparkSession,
-    path: str,
-    roi_bbox,  # bbox | polygon (WKT / vertex pairs) | list of those
-    toi_epochs: list[int] | None = None,
-    fail_after_blocks: bool = False,
+class _PhaseClock(dict):
+    """Phase name -> seconds since the previous lap, ``perf_counter``
+    only (no Spark job, no job-group label); the laps sum to the run."""
+
+    def __init__(self):
+        super().__init__()
+        self._last = time.perf_counter()
+
+    def lap(self, phase: str) -> None:
+        now = time.perf_counter()
+        self[phase], self._last = now - self._last, now
+
+
+def _commit_batch(
+    path: str, batch_id: str, lineage: DataFrame, clock: _PhaseClock, **fields
 ) -> dict:
-    """One idempotent cache-fill run (procedural_download analog).
+    """THE commit path: every store writer (``materialize`` and
+    ``materialize_patch`` through :func:`_fill_batch`, and ``compact``)
+    ends here. The phases of a write, in order, each timed into the
+    record's ``phase_s``:
 
-    Returns summary dict. ``fail_after_blocks`` simulates a crash
-    between the block write and the lineage commit (for resume tests —
-    the reference's kill-safety comes from icechunk commits; ours from
-    lineage-gated visibility)."""
-    spec = open_spec(path)
-    batch_id = uuid.uuid4().hex[:12]
-    # the "0"-prefixed batch-id namespace is RESERVED for compaction
-    # (winner = min(batch_id), so compacted batches must sort first)
-    while batch_id.startswith("0"):
-        batch_id = uuid.uuid4().hex[:12]
-    t0 = time.time()
+      plan     build and ``localCheckpoint`` the writer's chunk plan
+      count    one job counting the planned chunks
+      blocks   block parquet under ``blocks/batch=<id>/``
+      events   the per-partition ``events_write/`` rows (fills), or the
+               ``events/`` history copy + ``_covered.json`` (compact)
+      lineage  ``lineage/batch=<id>/`` parquet (here)
+      commit   the atomic ticket, :func:`_allocate_commit_seq` (here)
 
-    candidates = candidate_chunks(spark, spec, roi_bbox, toi_epochs)
-    lineage = read_lineage(spark, path)
-    missing = plan_missing(candidates, lineage)
-    # one shuffle to co-locate chunks of the same block bucket, so each
-    # output partition maps to one stable pt bucket
-    missing = missing.withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int")).withColumn(
-        "batch_id", F.lit(batch_id)
+    and then the ``metrics/<id>.json`` record, written atomically and
+    returned: ``{batch_id, **fields, sec, phase_s}``.
+
+    A crash at any boundary BEFORE the ticket leaves an invisible
+    orphan: readers, planning and snapshots all gate on the ticket, so
+    the visible state is the pre-run state, the next run redoes exactly
+    the missing chunks and ``vacuum()`` reaps the orphan dirs. A crash
+    AFTER the ticket leaves a committed batch — the clean run's visible
+    state — missing at most its metrics record (and a patch its
+    marker), never a torn file. No Spark job follows the ticket."""
+    lineage.select(*LINEAGE_COLS).write.mode("overwrite").parquet(
+        os.path.join(path, "lineage", f"batch={batch_id}")
     )
-    # the anti-join plan feeds three actions (count, block write,
-    # lineage write): bucket once, sort within partitions so the
-    # written files' row-group min/max stats on (tile_id, time_idx,
-    # channel) are tight (the pruning the module docstring promises —
-    # sorting the PLAN rows is cheap; the kernel preserves row order
-    # so the block rows land sorted too), then localCheckpoint.
+    clock.lap("lineage")
+    _allocate_commit_seq(path, batch_id)
+    clock.lap("commit")
+    record = {"batch_id": batch_id, **fields, "sec": sum(clock.values()), "phase_s": dict(clock)}
+    _write_json_atomic(os.path.join(path, "metrics", f"{batch_id}.json"), record)
+    return record
+
+
+def _fill_batch(
+    path: str, spec: CubeSpec, batch_id: str, plan: DataFrame, make_blocks,
+    clock: _PhaseClock, **fields,
+) -> dict | None:
+    """The fill writers' shared body: checkpoint + count the plan rows,
+    write blocks and write events, then :func:`_commit_batch` with the
+    per-chunk lineage. ``make_blocks(plan_subset)`` builds the
+    BLOCK_WRITE_SCHEMA frame (see :func:`_write_blocks`). Returns the
+    metrics record, or None — having written nothing — for an empty
+    plan."""
+    # the plan feeds three actions (count, block write, lineage write):
+    # bucket once, sort within partitions so the written files'
+    # row-group min/max stats on (tile_id, time_idx, channel) are
+    # tight (the pruning the module docstring promises — sorting the
+    # PLAN rows is cheap; the kernel preserves row order so the block
+    # rows land sorted too), then localCheckpoint.
     # EXPLICIT partition count: a bare repartition(col) is an AQE
     # coalesce target — at bench scale the plan rows are a few KB and
     # AQE folds them into ONE partition, serializing the whole fill
@@ -918,76 +959,87 @@ def materialize(
     # N_PARTS pins the bucket layout the module docstring promises
     # (CLAUDE.md rule: 2+ consumers -> checkpoint, never cache whose
     # evicted partitions silently recompute the anti-join per action)
-    missing = (
-        missing.repartition(N_PARTS, F.col("pt"))
+    plan = (
+        plan.withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int"))
+        .withColumn("batch_id", F.lit(batch_id))
+        .repartition(N_PARTS, F.col("pt"))
         .sortWithinPartitions("tile_id", "time_idx", "channel")
         .localCheckpoint(eager=True)
     )
+    clock.lap("plan")
     # per-channel counts in ONE job (replaces the plain count): the
-    # total gates the all-cached return, the channel set lets
+    # total gates the empty-plan return, the channel set lets
     # _write_blocks skip dtype groups with no planned chunks (a lazy
     # backfill of one evolved channel = one write job, not one per
     # dtype group)
     ch_counts = {r["channel"]: r["n"] for r in
-                 missing.groupBy("channel").agg(F.count("*").alias("n")).collect()}
-    n_missing = sum(ch_counts.values())
-    if n_missing == 0:
-        # nothing committed under this id — returning it would hand
-        # the caller a batch_id that snapshots()/as_of reject
-        return {
-            "batch_id": None, "written": 0, "skipped": "all cached",
-            "sec": time.time() - t0,
-        }
+                 plan.groupBy("channel").agg(F.count("*").alias("n")).collect()}
+    n_chunks = sum(ch_counts.values())
+    clock.lap("count")
+    if n_chunks == 0:
+        return None
 
     block_dir = os.path.join(path, "blocks", f"batch={batch_id}")
     t_write0 = time.time_ns() // 1000
-    _write_blocks(
-        spec,
-        missing,
-        block_dir,
-        lambda part: part.mapInPandas(
-            _gen_blocks_factory(spec.grid.chunk_px), schema=BLOCK_WRITE_SCHEMA
-        ),
-        present_channels=set(ch_counts),
-    )
+    _write_blocks(spec, plan, block_dir, make_blocks, present_channels=set(ch_counts))
+    clock.lap("blocks")
     # the per-chunk 'generate' event rows STAY inside the block files
     # (read_events column-prunes them out); the per-partition 'write'
     # rows come from the landed part files' metadata — no second events
     # write job per fill
     _record_write_events(path, batch_id, block_dir, t_write0)
-
-    if fail_after_blocks:
-        raise RuntimeError("simulated crash before lineage commit")
+    clock.lap("events")
 
     # lineage rows from the SAME pt-bucketed partitions the blocks
     # were written from, so partition_id names the block write
-    # partition (per-partition lineage contract) — the COMMIT.
+    # partition (per-partition lineage contract)
     n_px = spec.grid.chunk_px * spec.grid.chunk_px
-    lin = (
-        missing.withColumn("partition_id", F.spark_partition_id())
+    lineage = (
+        plan.withColumn("partition_id", F.spark_partition_id())
         .withColumn("n_rows", F.lit(1).cast("long"))
         .withColumn("n_bytes", _lineage_nbytes(spec, n_px))
         .withColumn("src_batch", F.col("batch_id"))
-        .select(
-            "chunk_key", "tile_id", "time_idx", "channel",
-            "batch_id", "partition_id", "n_rows", "n_bytes", "src_batch",
-        )
     )
-    lin_dir = os.path.join(path, "lineage", f"batch={batch_id}")
-    lin.write.mode("overwrite").parquet(lin_dir)
-    _allocate_commit_seq(path, batch_id)  # THE commit point (atomic ticket)
+    return _commit_batch(path, batch_id, lineage, clock, written=int(n_chunks), **fields)
 
-    # per-run metrics (event-log analog, core/backend.py:23-28)
-    metrics = {
-        "batch_id": batch_id,
-        "written": int(n_missing),
-        "sec": time.time() - t0,
-    }
-    mdir = os.path.join(path, "metrics")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, f"{batch_id}.json"), "w") as f:
-        json.dump(metrics, f)
-    return metrics
+
+def materialize(
+    spark: SparkSession,
+    path: str,
+    roi_bbox,  # bbox | polygon (WKT / vertex pairs) | list of those
+    toi_epochs: list[int] | None = None,
+) -> dict:
+    """One idempotent cache-fill run (procedural_download analog):
+    plan the ROI's chunks missing from committed lineage and commit
+    them as one batch (:func:`_fill_batch`). Returns the metrics
+    record, or ``{batch_id: None, written: 0, skipped, sec}`` when
+    every chunk is already cached. Kill-safe like the reference's
+    icechunk commits: see :func:`_commit_batch` for what a crash at
+    each phase boundary leaves behind."""
+    spec = open_spec(path)
+    batch_id = uuid.uuid4().hex[:12]
+    # the "0"-prefixed batch-id namespace is RESERVED for compaction
+    # (winner = min(batch_id), so compacted batches must sort first)
+    while batch_id.startswith("0"):
+        batch_id = uuid.uuid4().hex[:12]
+    clock = _PhaseClock()
+
+    candidates = candidate_chunks(spark, spec, roi_bbox, toi_epochs)
+    lineage = read_lineage(spark, path)
+    missing = plan_missing(candidates, lineage)
+    gen = _gen_blocks_factory(spec.grid.chunk_px)
+    record = _fill_batch(
+        path, spec, batch_id, missing,
+        lambda part: part.mapInPandas(gen, schema=BLOCK_WRITE_SCHEMA), clock,
+    )
+    if record is None:
+        # nothing committed under this id — returning it would hand
+        # the caller a batch_id that snapshots()/as_of reject
+        return {
+            "batch_id": None, "written": 0, "skipped": "all cached",
+            "sec": sum(clock.values()),
+        }
+    return record
 
 
 def materialize_patch(
@@ -1020,7 +1072,8 @@ def materialize_patch(
     serializes through icechunk conflict retries; racing a concurrent
     fill here could shadow its chunks with a merge that predates them).
     Idempotent under crash: an interrupted run leaves an invisible
-    orphan batch; re-running merges identically.
+    orphan batch (or, past the commit ticket, a committed merge whose
+    marker is missing); re-running merges identically.
 
     COVERAGE SEMANTICS (mirrors the reference, and worth saying out
     loud): a patch commits its chunks to lineage, so ``materialize()``
@@ -1032,24 +1085,11 @@ def materialize_patch(
     are in ``loaded_patches``). Do not mix fill() and fill_patch()
     expecting fill() to repair patch holes."""
     spec = open_spec(path)
-    os.makedirs(os.path.join(path, "patches"), exist_ok=True)
     marker = os.path.join(path, "patches", f"{patch_id}.json")
     if os.path.exists(marker):
         return {"batch_id": None, "written": 0, "skipped": "patch already applied", "sec": 0.0}
-    t0 = time.time()
+    clock = _PhaseClock()
     batch_id = _compact_id(path)
-
-    cand = candidate_chunks(spark, spec, patch_bbox, toi_epochs)
-    cand = (
-        cand.withColumn("pt", (F.col("tile_id") % N_PARTS).cast("int"))
-        .withColumn("batch_id", F.lit(batch_id))
-        .repartition(N_PARTS, F.col("pt"))
-        .sortWithinPartitions("tile_id", "time_idx", "channel")
-        .localCheckpoint(eager=True)  # feeds kernel + lineage + count
-    )
-    ch_counts = {r["channel"]: r["n"] for r in
-                 cand.groupBy("channel").agg(F.count("*").alias("n")).collect()}
-    n_chunks = sum(ch_counts.values())
     gb = spec.grid.geobox
     # currently-visible content of exactly these chunks (winner rows,
     # patch-bounded — the same pruned scan load() serves readers);
@@ -1088,45 +1128,21 @@ def materialize_patch(
             # advisory repartition (no pinned count): these rows carry
             # the ~80 KB block arrays, so AQE sizes the write sensibly —
             # a tiny patch lands 1-2 part files instead of N_PARTS
-            # near-empty ones (the kernel-feeding frame above IS pinned:
-            # its rows are KB-sized plan rows AQE would fold into one
+            # near-empty ones (the kernel-feeding plan IS pinned: its
+            # rows are KB-sized plan rows AQE would fold into one
             # serial task)
             .repartition(F.col("pt"))
             .sortWithinPartitions("tile_id", "time_idx", "channel")
         )
 
-    patch_block_dir = os.path.join(path, "blocks", f"batch={batch_id}")
-    t_write0 = time.time_ns() // 1000
-    _write_blocks(spec, cand, patch_block_dir, _merged, present_channels=set(ch_counts))
-    _record_write_events(path, batch_id, patch_block_dir, t_write0)
-
-    n_px = spec.grid.chunk_px * spec.grid.chunk_px
-    lin = (
-        cand.withColumn("partition_id", F.spark_partition_id())
-        .withColumn("n_rows", F.lit(1).cast("long"))
-        .withColumn("n_bytes", _lineage_nbytes(spec, n_px))
-        .withColumn("src_batch", F.col("batch_id"))
-        .select(
-            "chunk_key", "tile_id", "time_idx", "channel",
-            "batch_id", "partition_id", "n_rows", "n_bytes", "src_batch",
-        )
+    cand = candidate_chunks(spark, spec, patch_bbox, toi_epochs)
+    record = _fill_batch(path, spec, batch_id, cand, _merged, clock, patch_id=patch_id)
+    if record is None:  # a TOI selecting no time steps
+        return {"batch_id": None, "written": 0, "skipped": "no chunks", "sec": sum(clock.values())}
+    _write_json_atomic(
+        marker, {"patch_id": patch_id, "batch_id": batch_id, "bbox": list(patch_bbox)}
     )
-    lin.write.mode("overwrite").parquet(os.path.join(path, "lineage", f"batch={batch_id}"))
-    _allocate_commit_seq(path, batch_id)  # THE commit point
-
-    metrics = {
-        "batch_id": batch_id,
-        "written": int(n_chunks),
-        "patch_id": patch_id,
-        "sec": time.time() - t0,
-    }
-    with open(marker, "w") as f:
-        json.dump({"patch_id": patch_id, "batch_id": batch_id, "bbox": list(patch_bbox)}, f)
-    mdir = os.path.join(path, "metrics")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, f"{batch_id}.json"), "w") as f:
-        json.dump(metrics, f)
-    return metrics
+    return record
 
 
 def snapshots(path: str) -> list[dict]:
@@ -1781,19 +1797,24 @@ def compact(spark: SparkSession, path: str) -> dict:
     """Rewrite the visible chunk set as ONE batch (blocks + lineage) and
     carry the FULL committed event history into it (events are the
     append-only log — maintenance must not erase it; read_events
-    de-duplicates the carried copies). Returns
-    {batch_id, chunks, batches_covered}."""
+    de-duplicates the carried copies). Commits through
+    :func:`_commit_batch`; returns its metrics record plus
+    ``{chunks, batches_covered}``."""
     from pyspark.sql import Window
 
     committed = _lineage_batches(path)
     if len(committed) <= 1:
         return {"batch_id": None, "chunks": 0, "batches_covered": 0}
+    clock = _PhaseClock()
     new_id = _compact_id(path)
     lineage = read_lineage(spark, path)
     w = Window.partitionBy("chunk_key").orderBy(F.col("batch_id").asc())
     winners = (
         lineage.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
-    ).localCheckpoint(eager=True)  # feeds blocks semi-join AND the new lineage
+    ).localCheckpoint(eager=True)  # feeds the count, blocks semi-join AND the new lineage
+    clock.lap("plan")
+    n_chunks = winners.count()  # before the ticket: no Spark job may follow it
+    clock.lap("count")
 
     # per-dtype leaf groups: each storage element type is read with its
     # typed schema, semi-joined, and rewritten AS STORED — compaction
@@ -1836,54 +1857,45 @@ def compact(spark: SparkSession, path: str) -> dict:
         visible.write.mode("overwrite").parquet(target)
     if typed_layout:
         open(os.path.join(new_dir, "_SUCCESS"), "w").close()
+    clock.lap("blocks")
 
     # event history: copy every committed event row (original batch_id
     # values preserved in the COLUMN; the dir is the visibility unit)
     # into the compacted batch BEFORE its lineage commit, so vacuuming
     # the shadowed batches later loses nothing
-    events = read_events(spark, path)
-    events.write.mode("overwrite").parquet(
-        os.path.join(path, "events", f"batch={new_id}")
-    )
-
-    new_lineage = (
-        winners
-        # provenance survives the verbatim rewrite: CDC must see "same
-        # content" across a compaction (legacy rows coalesce to their
-        # pre-compaction batch id)
-        .withColumn("src_batch", F.coalesce(F.col("src_batch"), F.col("batch_id")))
-        .withColumn("batch_id", F.lit(new_id))
-        .select(
-            "chunk_key", "tile_id", "time_idx", "channel",
-            "batch_id", "partition_id", "n_rows", "n_bytes", "src_batch",
-        )
-    )
-    new_lineage.write.mode("overwrite").parquet(
-        os.path.join(path, "lineage", f"batch={new_id}")
-    )
-    # manifest of the batches whose event history THIS compaction
-    # carried — vacuum's ground truth for what is safe to delete. A
-    # batch committing concurrently (after our read_events above) is
-    # not listed, so its events can never be vacuumed on our account.
+    events_dir = os.path.join(path, "events", f"batch={new_id}")
+    read_events(spark, path).write.mode("overwrite").parquet(events_dir)
+    # manifest of the batches whose event history THIS copy carried —
+    # vacuum's ground truth for what is safe to delete. A batch
+    # committing concurrently (after our read_events above) is not
+    # listed, so its events can never be vacuumed on our account.
     # Leading underscore: Spark/Hadoop readers ignore the file.
-    with open(
-        os.path.join(path, "lineage", f"batch={new_id}", "_covered.json"), "w"
-    ) as mf:
-        json.dump(sorted(os.path.basename(b).split("=", 1)[1] for b in committed), mf)
-    # THE commit point: until the ticket lands the compacted batch is an
-    # invisible orphan (readers keep the old view); compaction commits
-    # LAST in seq order
-    _allocate_commit_seq(path, new_id)
-    n_chunks = winners.count()
-    return {"batch_id": new_id, "chunks": int(n_chunks), "batches_covered": len(committed)}
+    _write_json_atomic(
+        os.path.join(events_dir, "_covered.json"),
+        sorted(os.path.basename(b).split("=", 1)[1] for b in committed),
+    )
+    clock.lap("events")
+
+    # provenance survives the verbatim rewrite: CDC must see "same
+    # content" across a compaction (legacy rows coalesce to their
+    # pre-compaction batch id); compaction commits LAST in seq order
+    new_lineage = winners.withColumn(
+        "src_batch", F.coalesce(F.col("src_batch"), F.col("batch_id"))
+    ).withColumn("batch_id", F.lit(new_id))
+    record = _commit_batch(
+        path, new_id, new_lineage, clock,
+        written=int(n_chunks), batches_covered=len(committed),
+    )
+    return dict(record, chunks=record["written"])
 
 
 def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) -> dict:
     """Physically remove (1) uncommitted batch dirs older than
     ``min_orphan_age_sec`` (crashed orphans — invisible by the lineage
     gate) and (2) committed batches that a compaction RECORDED as
-    carried (its ``_covered.json`` manifest) and whose covering
-    compaction committed at least ``min_orphan_age_sec`` ago. Never
+    carried (the ``_covered.json`` manifest beside its events copy)
+    and whose covering compaction committed at least
+    ``min_orphan_age_sec`` ago. Never
     touches a batch that wins any chunk, and never deletes a shadowed
     batch no manifest vouches for (e.g. a dup-only concurrent fill that
     lost every chunk but whose event history was never carried — its
@@ -1948,8 +1960,14 @@ def vacuum(spark: SparkSession, path: str, min_orphan_age_sec: float = 86400.0) 
     vouched: set[str] = set()
     for b in sorted(committed):
         bid = b.split("=", 1)[1]
-        mf = os.path.join(path, "lineage", b, "_covered.json")
-        if not os.path.exists(mf):
+        # the manifest sits next to the events copy it describes; cubes
+        # compacted before that kept it in the lineage dir
+        mf = next(
+            (c for c in (os.path.join(path, sub, b, "_covered.json")
+                         for sub in ("events", "lineage")) if os.path.exists(c)),
+            None,
+        )
+        if mf is None:
             continue
         if now - ticket_mtime.get(bid, now) < min_orphan_age_sec:
             continue  # compaction too fresh: retention window still open

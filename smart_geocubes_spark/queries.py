@@ -189,9 +189,10 @@ GROUP BY 1
 
 
 def q_spatial_join_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact point-in-polygon join (ray-cast refine in Arrow UDF over
-    diamond patch footprints); oracle uses the diamond's closed form
-    |dx|/rx + |dy|/ry < 1 — a true independent check of the ray caster."""
+    """Exact point-in-polygon join over diamond patch footprints: cell
+    prejoin + bbox filter + the diamond's closed form
+    |dx|/rx + |dy|/ry < 1 as a JVM predicate (no Python hop); the
+    oracle evaluates the same closed form in DuckDB."""
     pts = _points(spark, sf_dir)
     cells = explode_catalog_to_cells(spark, catalog_df(spark))
     joined = pip_join(pts, cells)

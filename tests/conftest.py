@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -33,3 +34,29 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def crash_writing():
+    """``with crash_writing("lineage"): ...`` kills a store writer at a
+    phase boundary: every ``DataFrameWriter.parquet`` call whose target
+    lies under a ``lineage/`` (or ``blocks/``, ``events/``) dir raises
+    ``RuntimeError("simulated crash")`` before writing anything. The
+    original writer is restored when the block exits."""
+
+    @contextlib.contextmanager
+    def arm(subdir: str):
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        orig = DataFrameWriter.parquet
+
+        def parquet(self, path, *args, **kwargs):
+            if f"{os.sep}{subdir}{os.sep}" in str(path):
+                raise RuntimeError("simulated crash")
+            return orig(self, path, *args, **kwargs)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(DataFrameWriter, "parquet", parquet)
+            yield
+
+    return arm

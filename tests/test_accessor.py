@@ -95,6 +95,10 @@ def test_refill_idempotent_and_loaded_patches(spark, tmp_path):
     assert set(st.channel) == {"dem", "datamask"}
     met = acc.metrics()
     assert (met["written"].sum()) == 12
+    # per-phase seconds of the commit path ride in every record
+    phases = {"plan", "count", "blocks", "events", "lineage", "commit"}
+    for ps in met["phase_s"]:
+        assert set(ps) == phases and all(v >= 0 for v in ps.values())
 
 
 def test_temporal_toi_guard_and_load(spark, tmp_path):

@@ -6,7 +6,10 @@ and kill/concurrency tests (``tests/test_creation.py``,
 
 from __future__ import annotations
 
+import builtins
+import contextlib
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,12 +18,15 @@ from smart_geocubes_spark.geo.geobox import GeoBox, TileGrid
 from smart_geocubes_spark.plans.materialize import (
     CubeSpec,
     candidate_chunks,
+    compact,
     create_cube,
     load,
     materialize,
+    materialize_patch,
     open_spec,
     plan_missing,
     read_lineage,
+    vacuum,
 )
 
 SMALL_GRID = TileGrid(
@@ -32,11 +38,14 @@ ROI_A = (2.3, 15.2, 4.8, 17.9)  # tiles tx 2..4, ty 2..4 -> 3x3 = 9 tiles
 ROI_B = (3.3, 14.2, 6.8, 16.9)  # overlaps ROI_A
 
 
-@pytest.fixture()
-def cube(tmp_path):
-    path = str(tmp_path / "cube")
+def _new_cube(path: str) -> str:
     create_cube(path, CubeSpec(grid=SMALL_GRID, channels=("dem", "slope"), time_epochs=None))
     return path
+
+
+@pytest.fixture()
+def cube(tmp_path):
+    return _new_cube(str(tmp_path / "cube"))
 
 
 def test_create_exists_semantics(cube):
@@ -92,12 +101,12 @@ def test_incremental_overlap_writes_complement(spark, cube):
     assert lin.select("chunk_key").distinct().count() == 34
 
 
-def test_kill_and_restart_resume(spark, cube):
+def test_kill_and_restart_resume(spark, cube, crash_writing):
     """Crash between block write and lineage commit: orphan blocks stay
     invisible; restart completes to the exact same state as a clean run
     (reference semantics: uncommitted icechunk writes are invisible)."""
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        materialize(spark, cube, ROI_A, fail_after_blocks=True)
+    with crash_writing("lineage"), pytest.raises(RuntimeError, match="simulated crash"):
+        materialize(spark, cube, ROI_A)
     assert load(spark, cube, ROI_A).count() == 0  # nothing visible
     m = materialize(spark, cube, ROI_A)  # restart
     assert m["written"] == 18  # redoes exactly the missing chunks
@@ -115,7 +124,182 @@ def _visible_state(spark, cube, roi):
     }
 
 
-def test_compact_shadows_then_vacuum_drops(spark, cube):
+# ---------------------------------------------------------------------------
+# crash matrix: every store writer killed at every phase boundary of its
+# commit path (materialize._commit_batch)
+# ---------------------------------------------------------------------------
+
+CRASH_A = (2.3, 17.2, 3.8, 17.9)  # tiles (2,2), (3,2)
+CRASH_B = (3.3, 17.2, 4.8, 17.9)  # tiles (3,2), (4,2): overlaps CRASH_A
+CRASH_ROI = (2.3, 17.2, 4.8, 17.9)  # every tile either one touches
+CRASH_PATCH = (2.0, 17.0001, 2.5, 17.9999)  # left half of tile (2,2)
+
+# writer -> (ROIs filled before it runs, the run under test)
+CRASH_WRITERS = {
+    "materialize": ([CRASH_A], lambda spark, cube: materialize(spark, cube, CRASH_B)),
+    "materialize_patch": (
+        [CRASH_A],
+        lambda spark, cube: materialize_patch(
+            spark, cube, CRASH_PATCH, "p1", value_offset=1000.0
+        ),
+    ),
+    "compact": ([CRASH_A, CRASH_B], compact),
+}
+# boundary -> how the writer dies there: ("call", f) raises instead of
+# calling materialize.f, ("return", f) raises right after f returns,
+# ("write", d) fails every parquet write under a d/ dir, ("torn", d)
+# makes a file write under d/ die halfway through its content
+CRASH_POINTS = {
+    "before_blocks": ("call", "_write_blocks"),
+    "after_blocks": ("call", "_record_write_events"),
+    "after_events": ("write", "lineage"),
+    "after_lineage": ("call", "_allocate_commit_seq"),
+    "after_ticket": ("return", "_allocate_commit_seq"),
+    "during_metrics": ("torn", "metrics"),
+}
+# compact writes its blocks and events copy itself, not through the
+# fill helpers
+COMPACT_POINTS = {"before_blocks": ("write", "blocks"), "after_blocks": ("write", "events")}
+
+
+def _crash_state(spark, cube):
+    """Visible (chunk_key, array_min(block), shadow-namespace winner)
+    set over CRASH_ROI; asserts no chunk key is visible twice."""
+    rows = (
+        load(spark, cube, CRASH_ROI)
+        .select(
+            "chunk_key",
+            F.array_min("block").alias("mn"),
+            F.col("batch_id").startswith("0").alias("shadow"),
+        )
+        .collect()
+    )
+    assert len(rows) == len({r.chunk_key for r in rows}), "duplicate chunk keys"
+    return {tuple(r) for r in rows}
+
+
+@contextlib.contextmanager
+def _crash_at(kind, target, crash_writing):
+    import smart_geocubes_spark.plans.materialize as mat
+
+    if kind == "write":
+        with crash_writing(target):
+            yield
+        return
+    with pytest.MonkeyPatch.context() as mp:
+        if kind == "torn":
+            real_open = builtins.open
+
+            def torn_open(file, mode="r", *args, **kwargs):
+                f = real_open(file, mode, *args, **kwargs)
+                if "w" in mode and f"{os.sep}{target}{os.sep}" in str(file):
+                    real_write = f.write
+
+                    def write(text):
+                        real_write(text[: len(text) // 2])
+                        raise RuntimeError("simulated crash")
+
+                    f.write = write
+                return f
+
+            mp.setattr(builtins, "open", torn_open)
+        else:
+            orig = getattr(mat, target)
+
+            def crash(*args, **kwargs):
+                if kind == "return":
+                    orig(*args, **kwargs)
+                raise RuntimeError("simulated crash")
+
+            mp.setattr(mat, target, crash)
+        yield
+
+
+@contextlib.contextmanager
+def _no_spark_action_after_ticket(spark):
+    """Fail any DataFrame action a writer starts after its commit
+    ticket: past the commit point only driver-side file writes may
+    follow, or a failing job reports an error for a committed batch."""
+    import smart_geocubes_spark.plans.materialize as mat
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    DataFrame = type(spark.range(0))  # the concrete (classic) class
+
+    orig = mat._allocate_commit_seq
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("Spark action after the commit ticket")
+
+    with pytest.MonkeyPatch.context() as mp:
+
+        def ticket(*args, **kwargs):
+            seq = orig(*args, **kwargs)
+            for owner, name in ((DataFrame, "count"), (DataFrame, "collect"),
+                                (DataFrameWriter, "parquet")):
+                mp.setattr(owner, name, refuse)
+            return seq
+
+        mp.setattr(mat, "_allocate_commit_seq", ticket)
+        yield
+
+
+@pytest.fixture(scope="module")
+def crash_baseline(spark, tmp_path_factory):
+    """writer -> (a cube holding the writer's setup fills, its visible
+    state, the visible state a crash-free run leaves); built once per
+    writer — the clean run also checks that no Spark action follows
+    its ticket."""
+    baselines = {}
+
+    def get(writer):
+        if writer not in baselines:
+            root = tmp_path_factory.mktemp("crash")
+            template = _new_cube(str(root / "template"))
+            setup, run = CRASH_WRITERS[writer]
+            for roi in setup:
+                materialize(spark, template, roi)
+            clean = shutil.copytree(template, str(root / "clean"))
+            with _no_spark_action_after_ticket(spark):
+                run(spark, clean)
+            baselines[writer] = (
+                template, _crash_state(spark, template), _crash_state(spark, clean)
+            )
+        return baselines[writer]
+
+    return get
+
+
+@pytest.mark.parametrize("boundary", list(CRASH_POINTS))
+@pytest.mark.parametrize("writer", list(CRASH_WRITERS))
+def test_crash_matrix(spark, tmp_path, crash_writing, crash_baseline, writer, boundary):
+    """Kill a writer at a phase boundary: before the commit ticket the
+    visible state is the pre-run state, after it the clean run's; the
+    metrics stay readable (no torn record); a re-run converges to the
+    clean state; vacuum(0) changes nothing visible."""
+    from smart_geocubes_spark.accessor import GeocubeAccessor
+
+    template, before, clean = crash_baseline(writer)
+    assert before != clean  # the run under test changes the visible state
+    cube = shutil.copytree(template, str(tmp_path / "cube"))
+    run = CRASH_WRITERS[writer][1]
+    kind, target = {**CRASH_POINTS, **(COMPACT_POINTS if writer == "compact" else {})}[boundary]
+    with _crash_at(kind, target, crash_writing), pytest.raises(
+        RuntimeError, match="simulated crash"
+    ):
+        run(spark, cube)
+    committed = boundary in ("after_ticket", "during_metrics")
+    assert _crash_state(spark, cube) == (clean if committed else before)
+    # a torn metrics file would raise JSONDecodeError here, and on every
+    # later call
+    GeocubeAccessor(spark=spark, path=cube, spec=open_spec(cube)).metrics()
+
+    run(spark, cube)
+    assert _crash_state(spark, cube) == clean
+    vacuum(spark, cube, min_orphan_age_sec=0)
+    assert _crash_state(spark, cube) == clean
+
+
+def test_compact_shadows_then_vacuum_drops(spark, cube, crash_writing):
     """Compaction rewrites the visible winner set under a batch id that
     sorts FIRST (reserved '0' namespace), so the unchanged min-batch_id
     read rule flips to it atomically at lineage commit; vacuum then
@@ -128,8 +312,8 @@ def test_compact_shadows_then_vacuum_drops(spark, cube):
     big = (2.0, 14.0, 7.0, 18.0)
     materialize(spark, cube, ROI_A)
     materialize(spark, cube, ROI_B)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        materialize(spark, cube, big, fail_after_blocks=True)  # orphan
+    with crash_writing("lineage"), pytest.raises(RuntimeError, match="simulated crash"):
+        materialize(spark, cube, big)  # orphan
     before = _visible_state(spark, cube, big)
     assert before
 
@@ -306,14 +490,14 @@ def test_event_log_rows_and_duration_rollup(spark, cube):
     assert len(after) == len(all_ev)
 
 
-def test_event_log_crash_invisible(spark, cube):
+def test_event_log_crash_invisible(spark, cube, crash_writing):
     """Events of a batch whose lineage commit never landed must be
     invisible (same gate as blocks), and a resume run emits exactly the
     redone chunks' events."""
     from smart_geocubes_spark.plans.materialize import read_events
 
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        materialize(spark, cube, ROI_A, fail_after_blocks=True)
+    with crash_writing("lineage"), pytest.raises(RuntimeError, match="simulated crash"):
+        materialize(spark, cube, ROI_A)
     assert read_events(spark, cube).count() == 0
     m = materialize(spark, cube, ROI_A)
     ev = read_events(spark, cube)

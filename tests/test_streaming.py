@@ -212,7 +212,7 @@ class TestStreamFillRequests:
         assert res[1]["batch_id"] is None  # nothing committed under it
         assert read_lineage(spark, cube).count() == 9
 
-    def test_mid_fill_crash_then_stream_completes(self, spark, tmp_path):
+    def test_mid_fill_crash_then_stream_completes(self, spark, tmp_path, crash_writing):
         """A fill that died between block write and commit ticket left
         orphan blocks; the stream then fills the same ROI fresh and the
         orphans stay invisible — the batch crash contract composed with
@@ -224,8 +224,8 @@ class TestStreamFillRequests:
 
         cube = self._mk_cube(tmp_path)
         roi = (2.3, 15.2, 4.8, 17.9)
-        with _pytest.raises(RuntimeError, match="simulated crash"):
-            materialize(spark, cube, roi, fail_after_blocks=True)
+        with crash_writing("lineage"), _pytest.raises(RuntimeError, match="simulated crash"):
+            materialize(spark, cube, roi)
         assert load(spark, cube, roi).count() == 0  # orphans invisible
 
         reqs = str(tmp_path / "reqs")
